@@ -21,11 +21,8 @@ else.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from gms_spark.extract import extract_pages
 
@@ -156,55 +153,48 @@ def assign_dense_ids(df: DataFrame, order_cols: list, id_col: str = "id", num_pa
     """Dense ids 0..n-1 in the global order of ``order_cols`` — scalably.
 
     ``row_number() OVER (ORDER BY ...)`` funnels everything through ONE
-    partition; this is the distributed equivalent: range-repartition on
-    the order (parallel range sort, same machinery as orderBy), count per
-    partition, broadcast the tiny offset map, then add offset + local
-    position inside an Arrow batch. O(n/p) per task, no driver data.
+    partition; this is the distributed equivalent, and it never leaves
+    the JVM. Range-repartition on the order (parallel range sort, same
+    machinery as orderBy), sort within partitions, and in the same stage
+    tag each row with ``_pid = spark_partition_id()`` and ``_pos =
+    monotonically_increasing_id()``, which is ``(_pid << 33) + row number
+    in the partition``. One eager ``localCheckpoint`` then pins rows and
+    both tags; the per-partition counts are read from it, turned into a
+    P-entry offset literal on the driver, and the id is the projection
+    ``offset[_pid] + (_pos - (_pid << 33))``. O(n/p) per task, no driver
+    data, no single-partition window.
+
+    The pin is load-bearing for correctness, not a performance nicety:
+    repartitionByRange samples its range boundaries with a per-execution
+    random seed, so a consumer plan that re-evaluated the range subtree
+    (a frame referenced on both sides of a join, a retried stage) would
+    re-draw boundaries and assign DIFFERENT ids than a sibling branch —
+    ids stay bijective per evaluation, so the corruption is silent
+    (measured: a dedup verify join whose two sides disagreed on the
+    dictionary). Both tags are computed BEFORE the pin because they are
+    only meaningful against the one sort the checkpoint stores; after
+    it, the id is deterministic arithmetic on stored columns, safe for
+    any number of consumers and for retries (a lost block fails loudly
+    instead of resampling).
     """
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = (
+    pinned = (
         df.repartitionByRange(num_partitions, *order_cols)
         .sortWithinPartitions(*order_cols)
         .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_pos", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)
     )
-    ranged = ranged.persist()
-    counts = {int(r["_pid"]): int(r["cnt"]) for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    b_offsets = spark.sparkContext.broadcast(offsets)
-
-    out_schema = ranged.drop("_pid").schema.add(id_col, "long")
-
-    def add_ids(iterator):
-        # One partition = one or more Arrow batches of one _pid; rows are
-        # already sorted. Track local position across batches.
-        pos = 0
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            base = b_offsets.value[int(pdf["_pid"].iloc[0])]
-            out = pdf.drop(columns=["_pid"]).copy()
-            out[id_col] = range(base + pos, base + pos + len(pdf))
-            pos += len(pdf)
-            yield out
-
-    # Materialized EAGERLY before returning — load-bearing for
-    # correctness, not a performance nicety: repartitionByRange samples
-    # its range boundaries with a per-execution random seed, so any
-    # consumer plan that re-evaluates this subtree (a frame referenced
-    # on both sides of a join, a cache-bypassing branch, a retried
-    # stage) would re-draw boundaries and assign DIFFERENT ids than a
-    # sibling branch — ids stay bijective per evaluation, so the
-    # corruption is silent (measured: a dedup verify join whose two
-    # sides disagreed on the dictionary). The checkpoint pins one
-    # evaluation; downstream can only scan it (a lost block fails
-    # loudly instead of resampling).
-    return ranged.mapInPandas(add_ids, out_schema).localCheckpoint(eager=True)
+    counts = dict(pinned.groupBy("_pid").count().collect())
+    offsets = [0]
+    for p in range(max(counts, default=0)):
+        offsets.append(offsets[-1] + counts.get(p, 0))
+    pid = F.col("_pid")
+    local_pos = F.col("_pos") - F.shiftleft(pid.cast("long"), 33)
+    ids = F.array(*[F.lit(o) for o in offsets])[pid] + local_pos
+    return pinned.withColumn(id_col, ids).drop("_pid", "_pos")
 
 
 def dense_rank_ids(
@@ -270,8 +260,11 @@ def dense_rank_ids(
 
     # Eager checkpoint: same load-bearing barrier as assign_dense_ids —
     # the range sampling is per-execution random, so the one evaluation
-    # made here must be the only one consumers can ever see.
-    return ranged.mapInPandas(add_ids, out_schema).localCheckpoint(eager=True)
+    # made here must be the only one consumers can ever see. Once it
+    # exists nothing reads ``ranged`` again.
+    out = ranged.mapInPandas(add_ids, out_schema).localCheckpoint(eager=True)
+    ranged.unpersist()
+    return out
 
 
 def edges_from_pages(pages: DataFrame, keep_external: bool = False) -> tuple[DataFrame, DataFrame]:
@@ -305,15 +298,10 @@ def edges_from_pages(pages: DataFrame, keep_external: bool = False) -> tuple[Dat
     # before exchanging it — unstaged, the degree join would execute
     # once per pass
     all_urls = urls.join(deg, "url", "left").fillna(0, ["degree"]).localCheckpoint(eager=True)
-    # materialize the (slim) dictionary once: the edge join consumes it
-    # TWICE (src and dst side) and its id-assignment tail is an Arrow
-    # mapInPandas stage — left lazy, that Python stage runs once per
-    # consumer (and a third time for any caller using url_dict itself)
-    url_dict = (
-        assign_dense_ids(all_urls, [F.col("degree").desc(), F.col("url").asc()])
-        .select("url", "id")
-        .localCheckpoint(eager=True)
-    )
+    # url_dict is a projection over assign_dense_ids' own checkpoint:
+    # the edge join's two consumers (src and dst side) and any caller
+    # each pay only a cheap scan, so pinning it again would only add a job
+    url_dict = assign_dense_ids(all_urls, [F.col("degree").desc(), F.col("url").asc()]).select("url", "id")
 
     e = (
         links.join(url_dict.withColumnRenamed("url", "src_url").withColumnRenamed("id", "src"), "src_url")

@@ -10,9 +10,12 @@ Single place to pin the configs that matter at scale:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger("gms_spark.session")
 
 
 def _warm_session(spark: SparkSession) -> None:
@@ -58,11 +61,11 @@ def _warm_session(spark: SparkSession) -> None:
         spark.createDataFrame([(1, 2)], "a long, b long").mapInPandas(
             _identity, "a long, b long"
         ).collect()
-    except Exception:
+    except Exception as exc:
         # warmup is best-effort: a failure here must never break
         # session construction (e.g. a stripped-down pyspark without
-        # Arrow keeps working, just cold)
-        pass
+        # Arrow keeps working, just cold) — but it must not be silent
+        logger.warning("session warmup failed, queries will run cold: %r", exc)
 
 
 def get_spark(
